@@ -9,6 +9,7 @@ from __future__ import annotations
 import asyncio
 import datetime as dt_mod
 import re
+from decimal import Decimal
 
 import pytest
 
@@ -1541,6 +1542,197 @@ def test_ctas_insert_select_roundtrip(gateway):
         res = await c.query(f"SELECT * FROM {tbl}")
         # missing table maps to MySQL ER_NO_SUCH_TABLE (1146)
         assert isinstance(res[0], dict) and res[0].get("error") == 1146, res
+        await c.quit()
+
+    run_with_gateway(gateway, scenario)
+
+
+# One typed query, decoded to canonical Python values on every result
+# path: DECIMAL, DATE, µs/pre-1970 TIMESTAMP, DOUBLE, VARCHAR and NULLs
+# in several columns (so the binary NULL bitmap is exercised past bit 2).
+TYPED_SQL = (
+    "SELECT n_nationkey AS k, "
+    "CASE WHEN n_nationkey % 4 = 1 THEN NULL "
+    "ELSE CAST(n_nationkey * 12.5 - 100 AS DECIMAL(12,3)) END AS dec, "
+    "date_add(DATE '1969-12-27', n_nationkey * 3) AS d, "
+    "timestamp_micros(-86400000000 + n_nationkey * 3600123457) AS ts, "
+    "CASE WHEN n_nationkey % 5 = 0 THEN NULL "
+    "ELSE CAST(n_nationkey AS DOUBLE) / 3 END AS dbl, "
+    "CASE WHEN n_nationkey % 3 = 0 THEN '' ELSE n_name END AS s "
+    "FROM nation ORDER BY k"
+)
+
+
+def _canon_text(row):
+    k, dec, d, ts, dbl, s = row
+    return (int(k), None if dec is None else Decimal(dec),
+            dt_mod.date.fromisoformat(d), dt_mod.datetime.fromisoformat(ts),
+            None if dbl is None else float(dbl), s)
+
+
+def _binary_temporal(raw: bytes):
+    """Binary DATE/DATETIME value (after its length byte): 4 bytes for a
+    date, 7 without and 11 with microseconds for a datetime."""
+    y, mo, d = int.from_bytes(raw[0:2], "little"), raw[2], raw[3]
+    if len(raw) == 4:
+        return dt_mod.date(y, mo, d)
+    assert len(raw) in (7, 11), raw
+    us = int.from_bytes(raw[7:11], "little") if len(raw) == 11 else 0
+    return dt_mod.datetime(y, mo, d, raw[4], raw[5], raw[6], us)
+
+
+def _canon_binary(row):
+    k, dec, d, ts, dbl, s = row
+    return (k, None if dec is None else Decimal(dec), _binary_temporal(d),
+            _binary_temporal(ts), dbl, s)
+
+
+def test_typed_rows_agree_across_result_paths(gateway):
+    """Text COM_QUERY, binary COM_STMT_EXECUTE, a cursor drained by
+    COM_STMT_FETCH in batches of 7, and text over a CLIENT_COMPRESS
+    connection all decode to the same canonical rows."""
+    async def scenario(gw):
+        c = MiniClient("127.0.0.1", gw.bound_port)
+        await c.connect("sf001.alice")
+        (cols, text_rows), = await c.query(TYPED_SQL)
+        assert cols == ["k", "dec", "d", "ts", "dbl", "s"]
+        text = [_canon_text(r) for r in text_rows]
+        assert len(text) == 25
+        assert any(r[1] is None for r in text) and any(r[4] is None for r in text)
+        assert any(r[3].microsecond for r in text)
+        assert any(r[3].microsecond == 0 for r in text)
+        assert any(r[3].year == 1969 for r in text) and any(r[5] == "" for r in text)
+
+        sid, _ = await c.stmt_prepare(TYPED_SQL)
+        assert [t for _, t in c.last_prepare_columns] == [
+            C.MYSQL_TYPE_LONG, C.MYSQL_TYPE_NEWDECIMAL, C.MYSQL_TYPE_DATE,
+            C.MYSQL_TYPE_TIMESTAMP, C.MYSQL_TYPE_DOUBLE, C.MYSQL_TYPE_VAR_STRING]
+        _, bin_rows = await c.stmt_execute(sid, [])
+        assert [_canon_binary(r) for r in bin_rows] == text
+
+        cur_cols, status = await c.stmt_execute_cursor(sid, [])
+        assert cur_cols == c.last_prepare_columns
+        batches = []
+        while not status & C.SERVER_STATUS_LAST_ROW_SENT:
+            rows, status = await c.stmt_fetch(sid, 7, cur_cols)
+            batches.append(rows)
+        assert [len(b) for b in batches] == [7, 7, 7, 4]
+        assert [_canon_binary(r) for b in batches for r in b] == text
+        await c.quit()
+
+        z = MiniClient("127.0.0.1", gw.bound_port)
+        await z.connect("sf001.alice", compress=True)
+        (_, z_rows), = await z.query(TYPED_SQL)
+        assert [_canon_text(r) for r in z_rows] == text
+        await z.quit()
+
+    run_with_gateway(gateway, scenario)
+
+
+def test_zero_column_execute_answers_one_ok(gateway):
+    """A prepared zero-column statement (Spark DDL ack) answers exactly
+    one OK packet, like the same statement over COM_QUERY; a following
+    COM_PING proves no stray EOF was left in the stream."""
+    async def scenario(gw):
+        c = MiniClient("127.0.0.1", gw.bound_port)
+        await c.connect("sf001.alice")
+        sid, _ = await c.stmt_prepare("CACHE TABLE nation")
+        await c.command(C.COM_STMT_EXECUTE, c._encode_execute_body(sid, []))
+        ok = await c.pio.read_packet()
+        assert ok[0] == 0x00 and len(ok) >= 7, ok
+        assert int.from_bytes(ok[3:5], "little") & C.SERVER_STATUS_AUTOCOMMIT
+        assert (await c.ping())[0] == 0x00
+        assert (await c.query("UNCACHE TABLE nation"))[0]["ok"]
+        await c.quit()
+
+    run_with_gateway(gateway, scenario)
+
+
+def _is_eof(p: bytes) -> bool:
+    """The classic 5-byte EOF (0xFE, warnings, status)."""
+    return len(p) == 5 and p[0] == 0xFE
+
+
+def test_deprecate_eof_is_not_negotiated(gateway):
+    """The server never advertises CLIENT_DEPRECATE_EOF, so a client
+    that sets it anyway still gets classic EOF packets: after a text
+    result's column definitions and rows, after PREPARE's parameter and
+    column definitions, and at the end of a cursor FETCH."""
+    async def scenario(gw):
+        c = MiniClient("127.0.0.1", gw.bound_port)
+        c.capability |= C.CLIENT_DEPRECATE_EOF
+        await c.connect("sf001.alice")
+        assert not c.server_capability & C.CLIENT_DEPRECATE_EOF
+
+        await c.command(C.COM_QUERY,
+                        b"SELECT n_nationkey FROM nation ORDER BY 1 LIMIT 3")
+        assert Buffer(await c.pio.read_packet()).read_lenenc_int() == 1
+        await c._read_coldefs(1)
+        assert _is_eof(await c.pio.read_packet())
+        rows = [await c.pio.read_packet() for _ in range(3)]
+        assert all(r[0] != 0xFE for r in rows)
+        assert _is_eof(await c.pio.read_packet())
+
+        await c.command(C.COM_STMT_PREPARE,
+                        b"SELECT n_name FROM nation WHERE n_nationkey = ?")
+        b = Buffer(await c.pio.read_packet())
+        assert b.read_byte() == 0x00
+        sid, ncols, nparams = b.read_uint(4), b.read_uint(2), b.read_uint(2)
+        assert (ncols, nparams) == (1, 1)
+        await c._read_coldefs(1)
+        assert _is_eof(await c.pio.read_packet())
+        cols = await c._read_coldefs(1)
+        assert _is_eof(await c.pio.read_packet())
+
+        _, status = await c.stmt_execute_cursor(sid, [3])
+        assert status & C.SERVER_STATUS_CURSOR_EXISTS
+        await c.command(C.COM_STMT_FETCH,
+                        sid.to_bytes(4, "little") + (10).to_bytes(4, "little"))
+        rows, eof = await c._read_binary_rows(cols)
+        assert rows == [["NATION_3"]] and _is_eof(eof), (rows, eof)
+        assert (await c.ping())[0] == 0x00
+        await c.quit()
+
+    run_with_gateway(gateway, scenario)
+
+
+def _err_fields(p: bytes) -> tuple[int, str, str]:
+    assert p[0] == 0xFF, p
+    return (int.from_bytes(p[1:3], "little"), p[4:9].decode(),
+            p[9:].decode(errors="replace"))
+
+
+def test_runtime_error_reports_spark_message(gateway):
+    """A statement that fails while its rows are produced answers ERR
+    with Spark's own message and SQLSTATE HY000 (not py4j's wrapper
+    line, and not a connection-class 08xxx state) over COM_QUERY, binary
+    EXECUTE and cursor FETCH; the connection stays usable after each."""
+    sql = "SELECT raise_error('boom') AS x FROM nation"
+
+    async def scenario(gw):
+        c = MiniClient("127.0.0.1", gw.bound_port)
+        await c.connect("sf001.alice")
+        replies = []
+        await c.command(C.COM_QUERY, sql.encode())
+        replies.append(await c.pio.read_packet())
+        assert (await c.ping())[0] == 0x00
+
+        sid, _ = await c.stmt_prepare(sql)
+        await c.command(C.COM_STMT_EXECUTE, c._encode_execute_body(sid, []))
+        replies.append(await c.pio.read_packet())
+        assert (await c.ping())[0] == 0x00
+
+        cols, _ = await c.stmt_execute_cursor(sid, [])
+        await c.command(C.COM_STMT_FETCH,
+                        sid.to_bytes(4, "little") + (10).to_bytes(4, "little"))
+        replies.append(await c.pio.read_packet())
+        assert (await c.ping())[0] == 0x00
+
+        for p in replies:
+            code, state, message = _err_fields(p)
+            assert code == C.ER_UNKNOWN and state == "HY000", (code, state, message)
+            assert "boom" in message, message
+            assert "An error occurred while calling" not in message, message
         await c.quit()
 
     run_with_gateway(gateway, scenario)

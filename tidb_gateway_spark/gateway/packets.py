@@ -209,9 +209,9 @@ def err_packet(capability: int, code: int = C.ER_UNKNOWN, message: str = "",
 
 
 def ok_packet(capability: int, affected: int = 0, last_insert_id: int = 0,
-              status: int = C.SERVER_STATUS_AUTOCOMMIT, header: int = 0x00) -> bytes:
+              status: int = C.SERVER_STATUS_AUTOCOMMIT) -> bytes:
     b = Buffer()
-    b.write_byte(header)
+    b.write_byte(0x00)
     b.write_lenenc_int(affected)
     b.write_lenenc_int(last_insert_id)
     if capability & C.CLIENT_PROTOCOL_41:

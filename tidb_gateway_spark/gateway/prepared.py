@@ -20,7 +20,7 @@ import struct
 from dataclasses import dataclass
 
 from tidb_gateway_spark.gateway import constants as C
-from tidb_gateway_spark.gateway import packets
+from tidb_gateway_spark.gateway import result_encoder
 from tidb_gateway_spark.gateway.wire import Buffer, ProtocolError
 
 
@@ -33,12 +33,13 @@ class PreparedStatement:
     # Connector/J legitimately send new_params_bound_flag=0 on
     # re-EXECUTE, expecting the server to reuse these.
     param_types: list[tuple[int, int]] | None = None
-    # cursor-mode state (COM_STMT_EXECUTE with CURSOR_TYPE_READ_ONLY →
-    # rows are buffered and drained by COM_STMT_FETCH)
+    # open cursor (COM_STMT_EXECUTE with CURSOR_TYPE_READ_ONLY): the
+    # lazy binary-row payloads (result_encoder.binary_rows) that
+    # COM_STMT_FETCH drains
     cursor: object | None = None
-    # result-set column metadata resolved at PREPARE: list of
-    # (name, type_code, charset, display_length); None when the
-    # statement's schema could not be resolved ahead of EXECUTE.
+    # result-set column metadata resolved at PREPARE
+    # (result_encoder.columns_of); None when the statement's schema
+    # could not be resolved ahead of EXECUTE.
     columns: list[tuple[str, int, int, int]] | None = None
     # COM_STMT_SEND_LONG_DATA accumulator: param index → chunks.  The
     # client streams large values ahead of EXECUTE and omits them from
@@ -92,14 +93,11 @@ def prepare_ok_payloads(stmt: PreparedStatement, capability: int) -> list[bytes]
     b.write_uint(0, 2)  # warning count
     out = [b.getvalue()]
     if stmt.num_params:
-        for i in range(stmt.num_params):
-            out.append(packets.column_definition(f"?{i}", C.MYSQL_TYPE_VAR_STRING))
-        out.append(packets.eof_packet(capability))
+        params = result_encoder.text_columns([f"?{i}" for i in range(stmt.num_params)])
+        out += result_encoder.definition_payloads(params, capability, C.SERVER_STATUS_AUTOCOMMIT)
     if num_columns:
-        for name, code, charset, length in stmt.columns:
-            out.append(packets.column_definition(name, code, charset=charset,
-                                                 column_length=length))
-        out.append(packets.eof_packet(capability))
+        out += result_encoder.definition_payloads(stmt.columns, capability,
+                                                  C.SERVER_STATUS_AUTOCOMMIT)
     return out
 
 
@@ -278,7 +276,7 @@ def encode_binary_row(values: list, type_codes: list[int]) -> bytes:
             b.write_bytes(struct.pack("<f", float(v)))
         elif tcode == C.MYSQL_TYPE_DOUBLE:
             b.write_bytes(struct.pack("<d", float(v)))
-        elif tcode in (C.MYSQL_TYPE_DATE, C.MYSQL_TYPE_TIMESTAMP, 0x0C):
+        elif tcode in (C.MYSQL_TYPE_DATE, C.MYSQL_TYPE_TIMESTAMP, C.MYSQL_TYPE_DATETIME):
             # Binary date/time layout is length-prefixed and spec-minimal
             # (reference wire contract mysql/buffer.go:21-194): DATE
             # values carry 4 bytes (year, month, day), DATETIME 7, and 11
@@ -301,7 +299,5 @@ def encode_binary_row(values: list, type_codes: list[int]) -> bytes:
                 b.write_uint(y, 2)
                 b.write_bytes(bytes([mo, d, h, mi, s]))
         else:  # strings/decimal/blob/arrays → lenenc text
-            from tidb_gateway_spark.gateway.result_encoder import encode_value
-
-            b.write_lenenc_string(encode_value(v) or b"")
+            b.write_lenenc_string(result_encoder.encode_value(v) or b"")
     return b.getvalue()

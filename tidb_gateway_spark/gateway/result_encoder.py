@@ -1,16 +1,30 @@
-"""DataFrame → MySQL text-protocol result set.
+"""The gateway's one result-set path: Spark schema → MySQL result set.
 
-The inverse of SURVEY.md §1.3's type mapping: Spark types → MySQL column
-definition type codes (charset 46), then one lenenc text row per record.
+Everything a client receives as a result set is framed here, once:
+
+* one Spark-type table (SURVEY.md §1.3's mapping, inverted) gives each
+  column its MySQL type code, display length and charset
+  (``mysql_type_for``) and its DDL type name (``mysql_type_name``);
+* ``columns_of`` turns a schema into the column metadata that PREPARE
+  responses, result headers and cursors all describe;
+* ``frame`` lazily yields column count, column definitions, EOF, rows,
+  EOF.  The row encoder is the only thing that differs between text
+  rows (COM_QUERY, ``resultset_payloads``), binary rows (COM_STMT_EXECUTE
+  and cursor FETCH, ``binary_rows``) and locally built SHOW/sysvar
+  result sets (``write_simple_resultset``).
+
+Terminators are always classic EOF packets: the server never advertises
+the deprecate-EOF capability, and capabilities are negotiated once at
+handshake (client flags & advertised flags), so no client can turn it on.
 
 Flush discipline mirrors the reference's relay batching: bytes are
-buffered and the transport flushed only at result-set boundaries —
-column-count, rows streamed, then EOF/OK/ERR triggers the drain
-(/root/reference/gateway/relay.go:85-93).
+buffered and the transport flushed only at result-set boundaries
+(the reference's gateway/relay.go:85-93).
 
 Scale note: rows stream through ``toLocalIterator`` (one partition in
-flight on the driver) rather than ``collect`` — a 10 GB result set never
-materializes in driver memory at once.
+flight on the driver) rather than ``collect``, and nothing runs until the
+generator is advanced, which the server does on an executor thread.  A
+10 GB result set never materializes in driver memory at once.
 """
 
 from __future__ import annotations
@@ -26,56 +40,74 @@ from tidb_gateway_spark.gateway import packets
 
 _BINARY_CHARSET = 63
 
-_TYPE_MAP: list[tuple[type, tuple[int, int, int]]] = [
-    # SparkType → (mysql type code, display length, charset)
-    (T.ByteType, (C.MYSQL_TYPE_TINY, 4, _BINARY_CHARSET)),
-    (T.ShortType, (C.MYSQL_TYPE_SHORT, 6, _BINARY_CHARSET)),
-    (T.IntegerType, (C.MYSQL_TYPE_LONG, 11, _BINARY_CHARSET)),
-    (T.LongType, (C.MYSQL_TYPE_LONGLONG, 20, _BINARY_CHARSET)),
-    (T.FloatType, (C.MYSQL_TYPE_FLOAT, 12, _BINARY_CHARSET)),
-    (T.DoubleType, (C.MYSQL_TYPE_DOUBLE, 22, _BINARY_CHARSET)),
-    (T.DecimalType, (C.MYSQL_TYPE_NEWDECIMAL, 40, _BINARY_CHARSET)),
-    (T.BooleanType, (C.MYSQL_TYPE_TINY, 1, _BINARY_CHARSET)),
-    (T.DateType, (C.MYSQL_TYPE_DATE, 10, _BINARY_CHARSET)),
-    (T.TimestampType, (C.MYSQL_TYPE_TIMESTAMP, 26, _BINARY_CHARSET)),
-    (T.TimestampNTZType, (C.MYSQL_TYPE_TIMESTAMP, 26, _BINARY_CHARSET)),
-    (T.BinaryType, (C.MYSQL_TYPE_BLOB, 65535, _BINARY_CHARSET)),
-    (T.StringType, (C.MYSQL_TYPE_VAR_STRING, 1024, C.DEFAULT_COLLATION_ID)),
-]
+# Spark type → (mysql type code, display length, charset, DDL type name)
+_TYPES: dict[type, tuple[int, int, int, str]] = {
+    T.ByteType: (C.MYSQL_TYPE_TINY, 4, _BINARY_CHARSET, "tinyint(4)"),
+    T.ShortType: (C.MYSQL_TYPE_SHORT, 6, _BINARY_CHARSET, "smallint(6)"),
+    T.IntegerType: (C.MYSQL_TYPE_LONG, 11, _BINARY_CHARSET, "int(11)"),
+    T.LongType: (C.MYSQL_TYPE_LONGLONG, 20, _BINARY_CHARSET, "bigint(20)"),
+    T.FloatType: (C.MYSQL_TYPE_FLOAT, 12, _BINARY_CHARSET, "float"),
+    T.DoubleType: (C.MYSQL_TYPE_DOUBLE, 22, _BINARY_CHARSET, "double"),
+    # DDL name carries precision and scale (mysql_type_name)
+    T.DecimalType: (C.MYSQL_TYPE_NEWDECIMAL, 40, _BINARY_CHARSET, "decimal"),
+    T.BooleanType: (C.MYSQL_TYPE_TINY, 1, _BINARY_CHARSET, "tinyint(1)"),
+    T.DateType: (C.MYSQL_TYPE_DATE, 10, _BINARY_CHARSET, "date"),
+    T.TimestampType: (C.MYSQL_TYPE_TIMESTAMP, 26, _BINARY_CHARSET, "timestamp(6)"),
+    T.TimestampNTZType: (C.MYSQL_TYPE_TIMESTAMP, 26, _BINARY_CHARSET, "datetime(6)"),
+    T.BinaryType: (C.MYSQL_TYPE_BLOB, 65535, _BINARY_CHARSET, "blob"),
+    T.StringType: (C.MYSQL_TYPE_VAR_STRING, 1024, C.DEFAULT_COLLATION_ID, "varchar(1024)"),
+}
+# arrays / maps / structs serialize as JSON-ish text
+_OTHER = (C.MYSQL_TYPE_VAR_STRING, 4096, C.DEFAULT_COLLATION_ID, "text")
 
 
 def mysql_type_for(dt_: T.DataType) -> tuple[int, int, int]:
-    for klass, spec in _TYPE_MAP:
-        if isinstance(dt_, klass):
-            return spec
-    # arrays / maps / structs serialize as JSON-ish strings
-    return (C.MYSQL_TYPE_VAR_STRING, 4096, C.DEFAULT_COLLATION_ID)
-
-
-_TYPE_NAMES: list[tuple[type, str]] = [
-    (T.ByteType, "tinyint(4)"),
-    (T.ShortType, "smallint(6)"),
-    (T.IntegerType, "int(11)"),
-    (T.LongType, "bigint(20)"),
-    (T.FloatType, "float"),
-    (T.DoubleType, "double"),
-    (T.BooleanType, "tinyint(1)"),
-    (T.DateType, "date"),
-    (T.TimestampType, "timestamp(6)"),
-    (T.TimestampNTZType, "datetime(6)"),
-    (T.BinaryType, "blob"),
-    (T.StringType, "varchar(1024)"),
-]
+    """Spark type → (mysql type code, display length, charset)."""
+    return _TYPES.get(type(dt_), _OTHER)[:3]
 
 
 def mysql_type_name(dt_: T.DataType) -> str:
     """Spark type → MySQL column-type string (DESCRIBE / SHOW CREATE)."""
     if isinstance(dt_, T.DecimalType):
         return f"decimal({dt_.precision},{dt_.scale})"
-    for klass, name in _TYPE_NAMES:
-        if isinstance(dt_, klass):
-            return name
-    return "text"  # arrays/maps/structs serialize as JSON-ish text
+    return _TYPES.get(type(dt_), _OTHER)[3]
+
+
+def columns_of(schema: T.StructType) -> list[tuple[str, int, int, int]]:
+    """Schema → (name, type code, display length, charset) per column."""
+    return [(f.name, *mysql_type_for(f.dataType)) for f in schema.fields]
+
+
+def text_columns(names: list[str]) -> list[tuple[str, int, int, int]]:
+    """Plain string columns: locally built result sets and PREPARE's
+    parameter definitions."""
+    return [(name, C.MYSQL_TYPE_VAR_STRING, 255, C.DEFAULT_COLLATION_ID)
+            for name in names]
+
+
+def definition_payloads(columns, capability: int, status: int) -> list[bytes]:
+    """Column definition packets, then the EOF that closes them."""
+    return [
+        *(packets.column_definition(name, code, charset=charset, column_length=length)
+          for name, code, length, charset in columns),
+        packets.eof_packet(capability, status),
+    ]
+
+
+def header_payloads(columns, capability: int, status: int) -> list[bytes]:
+    """Column count, column definitions and their EOF: the head of a
+    result set (a cursor's EXECUTE answer is the head alone)."""
+    b = packets.Buffer()
+    b.write_lenenc_int(len(columns))
+    return [b.getvalue(), *definition_payloads(columns, capability, status)]
+
+
+def frame(columns, rows, capability: int, status: int):
+    """The one result-set framer: header, the encoded ``rows`` payloads,
+    then EOF, lazily."""
+    yield from header_payloads(columns, capability, status)
+    yield from rows
+    yield packets.eof_packet(capability, status)
 
 
 def encode_value(v: object) -> bytes | None:
@@ -96,79 +128,39 @@ def encode_value(v: object) -> bytes | None:
         return v.isoformat().encode()
     if isinstance(v, (list, tuple)):
         return ("[" + ",".join((encode_value(x) or b"NULL").decode() for x in v) + "]").encode()
-    if isinstance(v, dict):
-        return str(v).encode()
     return str(v).encode()
 
 
-def resultset_payloads(df: DataFrame, capability: int,
-                       status: int = C.SERVER_STATUS_AUTOCOMMIT,
-                       more_results: bool = False):
-    """Yield the packet payloads of a text result set, lazily.
-
-    Row production (``toLocalIterator``) happens wherever the generator
-    is driven — the server advances it on an executor thread in chunks
-    and writes the payloads from the event-loop thread, keeping the
-    asyncio transport single-threaded.
-    """
-    if more_results:
-        status |= C.SERVER_MORE_RESULTS_EXISTS
-    schema = df.schema
-    b = packets.Buffer()
-    b.write_lenenc_int(len(schema.fields))
-    yield b.getvalue()
-    for f in schema.fields:
-        code, length, charset = mysql_type_for(f.dataType)
-        yield packets.column_definition(f.name, code, charset=charset, column_length=length)
-    if not capability & C.CLIENT_DEPRECATE_EOF:
-        yield packets.eof_packet(capability, status)
-    for row in df.toLocalIterator():
+def text_rows(rows):
+    """Rows → text-protocol row packets."""
+    for row in rows:
         yield packets.text_row([encode_value(v) for v in row])
-    if capability & C.CLIENT_DEPRECATE_EOF:
-        yield packets.ok_packet(capability, status=status, header=0xFE)
-    else:
-        yield packets.eof_packet(capability, status)
 
 
-def binary_resultset_payloads(df: DataFrame, capability: int,
-                              status: int = C.SERVER_STATUS_AUTOCOMMIT):
-    """Binary-protocol result set (COM_STMT_EXECUTE responses)."""
-    from tidb_gateway_spark.gateway.prepared import encode_binary_row
+def binary_rows(df: DataFrame, columns):
+    """``df``'s rows → binary-protocol row packets, lazily: the rows of
+    an EXECUTE result set, or of an open cursor drained by FETCH."""
+    from tidb_gateway_spark.gateway import prepared  # prepared imports this module
 
-    schema = df.schema
-    type_codes = [mysql_type_for(f.dataType)[0] for f in schema.fields]
-    b = packets.Buffer()
-    b.write_lenenc_int(len(schema.fields))
-    yield b.getvalue()
-    for f in schema.fields:
-        code, length, charset = mysql_type_for(f.dataType)
-        yield packets.column_definition(f.name, code, charset=charset, column_length=length)
-    if not capability & C.CLIENT_DEPRECATE_EOF:
-        yield packets.eof_packet(capability, status)
+    codes = [code for _, code, _, _ in columns]
     for row in df.toLocalIterator():
-        yield encode_binary_row(list(row), type_codes)
-    if capability & C.CLIENT_DEPRECATE_EOF:
-        yield packets.ok_packet(capability, status=status, header=0xFE)
-    else:
-        yield packets.eof_packet(capability, status)
+        yield prepared.encode_binary_row(list(row), codes)
+
+
+def resultset_payloads(df: DataFrame, capability: int, status: int):
+    """Text-protocol result set of ``df`` (COM_QUERY), lazily."""
+    yield from frame(columns_of(df.schema), text_rows(df.toLocalIterator()),
+                     capability, status)
+
+
+def binary_resultset_payloads(df: DataFrame, capability: int, status: int):
+    """Binary-protocol result set of ``df`` (COM_STMT_EXECUTE), lazily."""
+    columns = columns_of(df.schema)
+    yield from frame(columns, binary_rows(df, columns), capability, status)
 
 
 def write_simple_resultset(pio, columns: list[str], rows: list[list[object]],
-                           capability: int, status: int = C.SERVER_STATUS_AUTOCOMMIT,
-                           more_results: bool = False) -> None:
-    """Locally synthesized result set (SHOW ..., SELECT @@var, ...)."""
-    if more_results:
-        status |= C.SERVER_MORE_RESULTS_EXISTS
-    b = packets.Buffer()
-    b.write_lenenc_int(len(columns))
-    pio.write_packet(b.getvalue())
-    for name in columns:
-        pio.write_packet(packets.column_definition(name, C.MYSQL_TYPE_VAR_STRING))
-    if not capability & C.CLIENT_DEPRECATE_EOF:
-        pio.write_packet(packets.eof_packet(capability, status))
-    for row in rows:
-        pio.write_packet(packets.text_row([encode_value(v) for v in row]))
-    if capability & C.CLIENT_DEPRECATE_EOF:
-        pio.write_packet(packets.ok_packet(capability, status=status, header=0xFE))
-    else:
-        pio.write_packet(packets.eof_packet(capability, status))
+                           capability: int, status: int) -> None:
+    """Locally built result set (SHOW ..., SELECT @@var, ...)."""
+    for p in frame(text_columns(columns), text_rows(rows), capability, status):
+        pio.write_packet(p)

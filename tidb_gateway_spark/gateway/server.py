@@ -26,15 +26,16 @@ import logging
 import time
 from concurrent.futures import ThreadPoolExecutor
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 from tidb_gateway_spark.catalog import TABLES, load_table
 from tidb_gateway_spark.gateway import constants as C
-from tidb_gateway_spark.gateway import dialect, packets, result_encoder
+from tidb_gateway_spark.gateway import dialect, packets, prepared, result_encoder
 from tidb_gateway_spark.gateway.auth import Authenticator
 from tidb_gateway_spark.gateway.compress import CompressedStream
 from tidb_gateway_spark.gateway.router import Router, UnknownClusterError
-from tidb_gateway_spark.gateway.wire import PacketIO, ProtocolError
+from tidb_gateway_spark.gateway.wire import Buffer, PacketIO, ProtocolError
 
 log = logging.getLogger("tidb_gateway_spark.gateway")
 
@@ -111,11 +112,11 @@ class Gateway:
         # Only advertise CLIENT_SSL when we can actually upgrade:
         # ssl-mode=PREFERRED clients send SSLRequest whenever the flag is
         # set and would dead-end on "SSL not enabled" otherwise.
-        cap = C.DEFAULT_CAPABILITY
+        advertised = C.DEFAULT_CAPABILITY
         if not self.ssl_context:
-            cap &= ~C.CLIENT_SSL
+            advertised &= ~C.CLIENT_SSL
         greeting = packets.Handshake(connection_id=conn_id,
-                                     auth_plugin_data=nonce, capability=cap)
+                                     auth_plugin_data=nonce, capability=advertised)
         pio.write_packet(greeting.write())
         await writer.drain()
 
@@ -139,6 +140,10 @@ class Gateway:
             pio.seq = seq
             res = packets.HandshakeResponse.read(await pio.read_packet())
 
+        # Negotiate once (the reference's capability mask, gateway.go:132-143):
+        # from here on only flags both sides set are in force, so a flag
+        # the server never advertised (e.g. deprecate-EOF) never applies.
+        res.capability &= advertised
         use_compression = bool(res.capability & C.CLIENT_COMPRESS)
 
         try:
@@ -295,8 +300,6 @@ class Gateway:
         ``{cluster}.{user}``, and reset all session state — the new
         identity gets a fresh Spark sub-session so it inherits no temp
         views or variables from the old one."""
-        from tidb_gateway_spark.gateway.wire import Buffer
-
         cap = session.capability
         b = Buffer(payload)
         username = b.read_string_null().decode()
@@ -346,10 +349,7 @@ class Gateway:
             try:
                 await self._run_statement(pio, session, stmt, more)
             except Exception as e:  # Spark analysis/execution errors → ERR
-                msg = str(e).split("\n")[0][:480]
-                code, state = _map_error(e)
-                pio.write_packet(packets.err_packet(cap, code=code, message=msg,
-                                                    sqlstate=state))
+                await self._send_error(pio, cap, e)
                 return
             finally:
                 session.current_query = None
@@ -372,12 +372,10 @@ class Gateway:
         elif kind == "sysvar":
             cols = [alias for _, alias in detail]
             row = [session.sysvar(name) for name, _ in detail]
-            result_encoder.write_simple_resultset(pio, cols, [row], cap,
-                                                 status=session.status, more_results=more)
+            result_encoder.write_simple_resultset(pio, cols, [row], cap, status)
         elif kind == "show":
             cols, rows = session.show(detail)
-            result_encoder.write_simple_resultset(pio, cols, rows, cap,
-                                                  status=session.status, more_results=more)
+            result_encoder.write_simple_resultset(pio, cols, rows, cap, status)
         elif kind in ("describe", "show_create"):
             loop = asyncio.get_running_loop()
             cols, rows = await loop.run_in_executor(
@@ -385,8 +383,7 @@ class Gateway:
                 (session.describe if kind == "describe" else session.show_create),
                 detail,
             )
-            result_encoder.write_simple_resultset(pio, cols, rows, cap,
-                                                  status=session.status, more_results=more)
+            result_encoder.write_simple_resultset(pio, cols, rows, cap, status)
         elif kind == "analyze":
             loop = asyncio.get_running_loop()
             await loop.run_in_executor(self.executor, session.analyze_table,
@@ -403,31 +400,39 @@ class Gateway:
                     message=f"Unknown thread id: {detail['id']}",
                     sqlstate="HY000"))
         else:
-            df = await self._sql_async(session, dialect.to_spark_sql(stmt))
-            if df is None or not df.columns:
-                # Zero-column frames are Spark DDL acks (CACHE TABLE,
-                # CREATE VIEW, REFRESH TABLE, ...) — the MySQL protocol
-                # has no 0-column resultset; answer OK like mysqld does
-                # for DDL.
-                pio.write_packet(packets.ok_packet(cap, status=status))
-                return
-            gen = result_encoder.resultset_payloads(
-                df, cap, status=session.status, more_results=more
+            df, columns = await self._plan(session, dialect.to_spark_sql(stmt))
+            await self._reply(pio, session, df, columns,
+                              result_encoder.resultset_payloads, status)
+
+    async def _reply(self, pio, session, df, columns, payloads, status: int) -> None:
+        """The one DataFrame → reply step of COM_QUERY and
+        COM_STMT_EXECUTE.  Zero-column frames are Spark DDL acks (CACHE
+        TABLE, CREATE VIEW, REFRESH TABLE, ...): the MySQL protocol has
+        no 0-column result set, so they answer OK like mysqld does for
+        DDL.  Anything else streams ``payloads(df, capability, status)``."""
+        if not columns:
+            pio.write_packet(packets.ok_packet(session.capability, status=status))
+            return
+        await self._stream(pio, session, payloads(df, session.capability, status))
+
+    async def _stream(self, pio, session, gen) -> int:
+        """The one off-loop streaming loop: advance the payload
+        generator (and Spark's toLocalIterator beneath it) on an executor
+        thread, 512 payloads at a time, and write them from the loop
+        thread.  Tagged, so the jobs the iterator triggers are KILL
+        QUERY-able.  Returns the number of payloads written."""
+        loop = asyncio.get_running_loop()
+        n = 0
+        while True:
+            chunk = await loop.run_in_executor(
+                self.executor,
+                self._tagged(session, lambda: list(itertools.islice(gen, 512))),
             )
-            loop = asyncio.get_running_loop()
-            while True:
-                # advance the generator (and Spark's toLocalIterator) off
-                # the event loop; write from the loop thread — tagged so
-                # the jobs the iterator triggers are KILL QUERY-able
-                chunk = await loop.run_in_executor(
-                    self.executor,
-                    self._tagged(session,
-                                 lambda: list(itertools.islice(gen, 512))),
-                )
-                if not chunk:
-                    break
-                for payload in chunk:
-                    pio.write_packet(payload)
+            for payload in chunk:
+                pio.write_packet(payload)
+            n += len(chunk)
+            if len(chunk) < 512:
+                return n
 
     async def _load_data_local(self, pio, session, detail: dict, more: bool) -> None:
         """LOAD DATA LOCAL INFILE (ClientLocalFiles, constants.go:10):
@@ -459,8 +464,6 @@ class Gateway:
         return await pio.read_packet()
 
     async def _stmt_prepare(self, pio, session, sql: str) -> None:
-        from tidb_gateway_spark.gateway import prepared
-
         stmt = prepared.PreparedStatement(
             stmt_id=session.next_stmt_id(),
             sql=sql,
@@ -477,28 +480,17 @@ class Gateway:
         no job runs.  Returns None (num_columns=0 in the response) for
         non-rowset statements or when analysis fails (e.g. params in
         positions where a NULL changes resolution)."""
-        from tidb_gateway_spark.gateway import prepared
-
         head = stmt.sql.lstrip()[:8].upper()
         if not head.startswith(("SELECT", "WITH", "VALUES", "TABLE", "(")):
             return None
         try:
             probe_sql = prepared.bind(stmt.sql, [None] * stmt.num_params)
-            df = await self._sql_async(session, dialect.to_spark_sql(probe_sql))
-            if df is None:
-                return None
-            cols = []
-            for f in df.schema.fields:
-                code, length, charset = result_encoder.mysql_type_for(f.dataType)
-                cols.append((f.name, code, charset, length))
-            return cols
+            _, columns = await self._plan(session, dialect.to_spark_sql(probe_sql))
+            return columns
         except Exception:
             return None
 
     async def _stmt_execute(self, pio, session, payload: bytes) -> None:
-        from tidb_gateway_spark.gateway import prepared
-        from tidb_gateway_spark.gateway.wire import Buffer
-
         cap = session.capability
         b = Buffer(payload)
         stmt_id = b.read_uint(4)
@@ -523,73 +515,32 @@ class Gateway:
             if types:
                 stmt.param_types = types
             sql = prepared.bind(stmt.sql, values)
-            df = await self._sql_async(session, dialect.to_spark_sql(sql))
-        except Exception as e:
-            code, state = _map_error(e)
-            pio.write_packet(packets.err_packet(cap, code=code,
-                                                message=str(e).split("\n")[0][:480],
-                                                sqlstate=state))
-            return
-        if flags & C.CURSOR_TYPE_READ_ONLY and df is not None:
-            await self._open_cursor(pio, session, stmt, df)
-            return
-        gen = result_encoder.binary_resultset_payloads(df, cap, status=session.status)
-        loop = asyncio.get_running_loop()
-        try:
-            while True:
-                chunk = await loop.run_in_executor(
-                    self.executor,
-                    self._tagged(session,
-                                 lambda: list(itertools.islice(gen, 512))),
-                )
-                if not chunk:
-                    break
-                for p in chunk:
+            df, columns = await self._plan(session, dialect.to_spark_sql(sql))
+            if flags & C.CURSOR_TYPE_READ_ONLY and columns:
+                # CURSOR_TYPE_READ_ONLY: answer with the result header
+                # only (status carries SERVER_STATUS_CURSOR_EXISTS,
+                # constants.go:23-37); COM_STMT_FETCH drains the rows.
+                stmt.cursor = result_encoder.binary_rows(df, columns)
+                for p in result_encoder.header_payloads(
+                        columns, cap, session.status | C.SERVER_STATUS_CURSOR_EXISTS):
                     pio.write_packet(p)
+            else:
+                await self._reply(pio, session, df, columns,
+                                  result_encoder.binary_resultset_payloads,
+                                  session.status)
         except Exception as e:
             # Spark evaluation is lazy: execution errors surface during
-            # iteration — answer with ERR instead of dropping the
-            # connection (mid-result-set errors still tear down, as the
-            # wire format has no row-stream abort marker)
-            code, state = _map_error(e)
-            pio.write_packet(packets.err_packet(cap, code=code,
-                                                message=str(e).split("\n")[0][:480],
-                                                sqlstate=state))
-
-    async def _open_cursor(self, pio, session, stmt, df) -> None:
-        """CURSOR_TYPE_READ_ONLY EXECUTE: answer with column definitions
-        only (status carries SERVER_STATUS_CURSOR_EXISTS,
-        constants.go:23-37); rows are drained by COM_STMT_FETCH."""
-        cap = session.capability
-        schema = df.schema
-        type_codes = [result_encoder.mysql_type_for(f.dataType)[0]
-                      for f in schema.fields]
-        loop = asyncio.get_running_loop()
-        # toLocalIterator() triggers planning; keep it off the event loop.
-        row_iter = await loop.run_in_executor(
-            self.executor, self._tagged(session, df.toLocalIterator))
-        stmt.cursor = {"iter": row_iter, "type_codes": type_codes}
-        status = session.status | C.SERVER_STATUS_CURSOR_EXISTS
-        b = packets.Buffer()
-        b.write_lenenc_int(len(schema.fields))
-        pio.write_packet(b.getvalue())
-        for f in schema.fields:
-            code, length, charset = result_encoder.mysql_type_for(f.dataType)
-            pio.write_packet(packets.column_definition(
-                f.name, code, charset=charset, column_length=length))
-        pio.write_packet(packets.eof_packet(cap, status))
+            # iteration (mid-result-set, the ERR follows the rows sent)
+            await self._send_error(pio, cap, e)
 
     async def _stmt_fetch(self, pio, session, payload: bytes) -> None:
         """COM_STMT_FETCH: stream up to num_rows binary rows from the
         statement's open cursor; EOF carries CURSOR_EXISTS while rows
         remain and LAST_ROW_SENT once drained."""
-        from tidb_gateway_spark.gateway import prepared
-        from tidb_gateway_spark.gateway.wire import Buffer
-
         cap = session.capability
         b = Buffer(payload)
         stmt_id = b.read_uint(4)
-        want = b.read_uint(4)
+        want = max(1, b.read_uint(4))
         stmt = session.stmts.get(stmt_id)
         if stmt is None or stmt.cursor is None:
             pio.write_packet(packets.err_packet(
@@ -597,41 +548,40 @@ class Gateway:
                 message="Unknown prepared statement or no open cursor",
                 sqlstate="HY000"))
             return
-        cur = stmt.cursor
-        loop = asyncio.get_running_loop()
         try:
-            rows = await loop.run_in_executor(
-                self.executor,
-                self._tagged(session,
-                             lambda: list(itertools.islice(cur["iter"],
-                                                           max(1, want)))),
-            )
-            for row in rows:
-                pio.write_packet(
-                    prepared.encode_binary_row(list(row), cur["type_codes"])
-                )
+            sent = await self._stream(pio, session, itertools.islice(stmt.cursor, want))
         except Exception as e:
-            code, state = _map_error(e)
-            pio.write_packet(packets.err_packet(cap, code=code,
-                                                message=str(e).split("\n")[0][:480],
-                                                sqlstate=state))
             stmt.cursor = None
+            await self._send_error(pio, cap, e)
             return
-        exhausted = len(rows) < max(1, want)
         status = session.status | C.SERVER_STATUS_CURSOR_EXISTS
-        if exhausted:
+        if sent < want:
             status |= C.SERVER_STATUS_LAST_ROW_SENT
             stmt.cursor = None
         pio.write_packet(packets.eof_packet(cap, status))
 
-    async def _sql_async(self, session, sql: str):
+    async def _plan(self, session, sql: str):
+        """Analyze one statement off the event loop: its DataFrame and
+        its result's column metadata (resolving the schema here keeps
+        that JVM call off the loop too).  No job runs."""
         loop = asyncio.get_running_loop()
 
         def run():
             session.ensure_views()
-            return session.spark.sql(sql)
+            df = session.spark.sql(sql)
+            return df, result_encoder.columns_of(df.schema)
 
         return await loop.run_in_executor(self.executor, self._tagged(session, run))
+
+    async def _send_error(self, pio, cap: int, e: Exception) -> None:
+        """The one statement-error reply: exception → ERR packet.
+        Rendering a Spark exception calls into the JVM, so that runs on
+        an executor thread too."""
+        loop = asyncio.get_running_loop()
+        text = await loop.run_in_executor(self.executor, _error_text, e)
+        code, state = _map_error(e, text)
+        pio.write_packet(packets.err_packet(cap, code=code, sqlstate=state,
+                                            message=text.split("\n")[0][:480]))
 
     # ---- process management (SHOW PROCESSLIST / KILL / COM_PROCESS_*) ----
     def _tagged(self, session, fn):
@@ -734,13 +684,27 @@ class _QueryKilled(Exception):
         return "Query execution was interrupted"
 
 
-def _map_error(e: Exception) -> tuple[int, str]:
-    """Spark exception → MySQL (code, sqlstate) (SURVEY.md §4.2; the
-    reference emits only 1105/08S01, constants.go:525-526)."""
+def _error_text(e: Exception) -> str:
+    """Row iteration can raise py4j's raw Py4JJavaError (pyspark does
+    not convert the JVM's awaitResult wrapper around a failed job); its
+    own text opens with the line ``An error occurred while calling
+    oNNN.getResult.``, so report the root Java cause's message instead."""
+    if isinstance(e, Py4JJavaError):
+        j = e.java_exception
+        while j.getCause() is not None:
+            j = j.getCause()
+        return j.getMessage() or j.toString()
+    return str(e)
+
+
+def _map_error(e: Exception, text: str) -> tuple[int, str]:
+    """Spark exception → MySQL (code, sqlstate) (SURVEY.md §4.2).  The
+    reference emits only 1105/08S01 (constants.go:525-526); an unmapped
+    statement error here is 1105/HY000, since 08xxx states tell JDBC
+    pools the connection is broken and make them evict it."""
     if isinstance(e, _QueryKilled):
         return C.ER_QUERY_INTERRUPTED, "70100"
     name = type(e).__name__
-    text = str(e)
     if "TABLE_OR_VIEW_NOT_FOUND" in text:
         return 1146, "42S02"
     if "UNRESOLVED_COLUMN" in text:
@@ -750,7 +714,7 @@ def _map_error(e: Exception) -> tuple[int, str]:
     if "cancelled" in text.lower() or "SparkJobCancelled" in name:
         # job-group cancellation from KILL QUERY (MySQL 1317/70100)
         return C.ER_QUERY_INTERRUPTED, "70100"
-    return C.ER_UNKNOWN, C.SQLSTATE_UNKNOWN
+    return C.ER_UNKNOWN, "HY000"
 
 
 class _Session:
@@ -933,24 +897,20 @@ class _Session:
 
     def describe(self, table: str) -> tuple[list[str], list[list[object]]]:
         """DESCRIBE / SHOW COLUMNS — inverse type mapping (SURVEY §1.3)."""
-        from tidb_gateway_spark.gateway.result_encoder import mysql_type_name
-
         self.ensure_views()
         schema = self.spark.table(table).schema
         rows = [
-            [f.name, mysql_type_name(f.dataType), "YES" if f.nullable else "NO",
+            [f.name, result_encoder.mysql_type_name(f.dataType), "YES" if f.nullable else "NO",
              "", None, ""]
             for f in schema.fields
         ]
         return ["Field", "Type", "Null", "Key", "Default", "Extra"], rows
 
     def show_create(self, table: str) -> tuple[list[str], list[list[object]]]:
-        from tidb_gateway_spark.gateway.result_encoder import mysql_type_name
-
         self.ensure_views()
         schema = self.spark.table(table).schema
         cols = ",\n".join(
-            f"  `{f.name}` {mysql_type_name(f.dataType)}"
+            f"  `{f.name}` {result_encoder.mysql_type_name(f.dataType)}"
             + ("" if f.nullable else " NOT NULL")
             for f in schema.fields
         )

@@ -25,13 +25,6 @@ def hash_bps(key: Column, salt: str = "split") -> Column:
     )
 
 
-def deterministic_split(df: DataFrame, key: str, train_bps: int = 9_000,
-                        salt: str = "split") -> tuple[DataFrame, DataFrame]:
-    """(train, eval) split at ``train_bps``/10000 by hashed key."""
-    bucket = hash_bps(F.col(key), salt)
-    return df.filter(bucket < train_bps), df.filter(bucket >= train_bps)
-
-
 def mixture_keep(key: Column, stratum: Column, rates_bps: dict[str, int],
                  salt: str = "mix") -> Column:
     """Boolean keep decision for mixture resampling:

@@ -642,17 +642,6 @@ def matryoshka_nn_pairs(corpus: DataFrame, probes: list[tuple[int, list[float]]]
 # external SQL oracle reproduces the flags bit-for-bit — float dot sums
 # are order-dependent, integer dots are not.
 
-def quantize_int_expr(vec_col: str) -> Column:
-    """array<bigint> quantization q_i = floor(100 · double(x_i)).
-
-    floor (not round) on the double-widened value: floor is defined
-    identically in numpy / Spark / DuckDB, while round's half-way rule
-    differs per engine (banker's vs half-away)."""
-    return F.expr(
-        f"transform({vec_col}, x -> CAST(floor(CAST(x AS DOUBLE) * 100) AS BIGINT))"
-    )
-
-
 def semantic_cells(vectors: DataFrame,
                    seeds: list[tuple[int, list[float]]],
                    id_col: str = "vec_id",

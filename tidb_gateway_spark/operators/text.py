@@ -12,7 +12,7 @@ DuckDB forms live in queries/llm_extended.py.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # BPE-ish token pattern: letter runs, digit runs, single other-symbols.
@@ -147,15 +147,3 @@ def word_repetition_bucket(text: Column) -> Column:
     u = F.size(F.array_distinct(toks))
     # blank-doc guard (nonempty_words caveat): trim=='' ⇒ n would be 1
     return F.when(t != "", F.floor((n - u) * 10 / n).cast("int"))
-
-
-def with_text_stats(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach lang_pred / qscore / ws_tokens / bpe_tokens / fp columns."""
-    t = F.col(text_col)
-    return (
-        documents.withColumn("lang_pred", lang_id(t))
-        .withColumn("qscore", quality_score(t, F.col("n_chars")))
-        .withColumn("ws_tokens", ws_token_count(t))
-        .withColumn("bpe_tokens", bpe_token_count(t))
-        .withColumn("fp", fingerprint(text_col))
-    )
